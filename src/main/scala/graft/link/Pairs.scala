@@ -29,11 +29,23 @@ object Pairs {
 
   val WindowSize = 2
 
-  /** Stable numeric mention id: doc_id * 10^8 + start * 10^4 + end offset
-    * (spans are < 10^4 by the tagger text cap). */
-  def mentionIdCol: Column =
-    (col("doc_id").cast("long") * lit(100000000L)) +
-      (col("start").cast("long") * lit(10000L)) + col("end").cast("long")
+  /** Largest doc_id whose mention ids (≤ (doc_id + 1) * 10^8) fit a Long. */
+  val MaxMentionDocId = 92233720367L
+
+  /** Stable numeric mention id: doc_id * 10^8 + start * 10^4 + end. It is
+    * unique while 0 ≤ start < end ≤ 10^4 (the tagger text cap) and
+    * 0 ≤ doc_id ≤ MaxMentionDocId; clusters are keyed by it, so a row
+    * outside those bounds raises an error instead of colliding. */
+  def mentionIdCol: Column = {
+    val (doc, start, end) =
+      (col("doc_id").cast("long"), col("start").cast("long"), col("end").cast("long"))
+    val packable = doc.between(0L, MaxMentionDocId) && start >= 0L && start < end &&
+      end <= 10000L
+    when(!packable, raise_error(format_string("mention id out of range: doc_id=%s " +
+      s"start=%s end=%s (need 0 <= start < end <= 10000, 0 <= doc_id <= $MaxMentionDocId)",
+      doc, start, end)))
+      .otherwise(doc * lit(100000000L) + start * lit(10000L) + end)
+  }
 
   /** Globally-dense 1-based sequence number per block — semantically
     * `row_number() over (partition by block_key order by mention_id)` —

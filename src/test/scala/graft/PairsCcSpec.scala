@@ -10,6 +10,35 @@ class PairsCcSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** The path 1 - 2 - … - n with ids under a fixed pseudorandom permutation
+    * of 1..n: no id locality for the contraction to exploit. */
+  private def permutedPath(n: Int): Seq[(Long, Long)] = {
+    val id = new scala.util.Random(7).shuffle((1 to n).map(_.toLong)).toIndexedSeq
+    (0 until n - 1).map(i => (id(i), id(i + 1)))
+  }
+
+  /** Reference components: sequential union-find, component = min id. */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  private def withGate[T](gate: Option[String])(body: => T): T = {
+    gate.foreach(spark.conf.set("spark.graft.cc.localSolveEdges", _))
+    try body finally spark.conf.unset("spark.graft.cc.localSolveEdges")
+  }
+
+  private def components(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("jaro-winkler matches the classic published goldens") {
     assert(math.abs(JaroWinkler.similarity("MARTHA", "MARHTA") - 0.9611111111) < 1e-9)
     assert(math.abs(JaroWinkler.similarity("DWAYNE", "DUANE") - 0.84) < 1e-9)
@@ -45,24 +74,28 @@ class PairsCcSpec extends AnyFunSuite {
     assert(got.values.toSet == Set(1L))
   }
 
+  // gates: the distributed loop on the contracted graph, the driver solve
+  // of the contracted graph, and the default (straight to the driver)
+  private val gates = Seq(Some("0"), Some("50"), None)
+
+  private def matchesUnionFindAtEveryGate(edges: Seq[(Long, Long)]): Unit = {
+    val want = unionFind(edges)
+    for (gate <- gates) withGate(gate) {
+      assert(components(ConnectedComponents.run(spark, edges.toDF("src", "dst"))) == want,
+        s"gate $gate")
+    }
+  }
+
   test("CC local union-find endgame == distributed loop on a random graph") {
-    // deterministic random graph: mixes chains, stars and isolated pairs
+    // deterministic random graph: mixes chains, stars and isolated pairs;
+    // random endpoints leave no id locality for the contraction
     val rnd = new scala.util.Random(42)
     val edges = Seq.tabulate(4000) { i =>
       val a = rnd.nextInt(1500).toLong
       val b = rnd.nextInt(1500).toLong
       (a + 1, b + 1)
-    }.filter { case (a, b) => a != b }.toDF("src", "dst")
-    // default conf: local solve engages (4k edges << 2M gate)
-    val local = ConnectedComponents.run(spark, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // force the distributed loop path
-    spark.conf.set("spark.graft.cc.localSolveEdges", "0")
-    try {
-      val loop = ConnectedComponents.run(spark, edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(local == loop)
-    } finally spark.conf.unset("spark.graft.cc.localSolveEdges")
+    }.filter { case (a, b) => a != b }
+    matchesUnionFindAtEveryGate(edges)
   }
 
   test("CC loop resumes from committed snapshots after a mid-run kill") {
@@ -70,9 +103,11 @@ class PairsCcSpec extends AnyFunSuite {
     // metrics". Kill = a run bounded to too few rounds (its committed
     // snapshots survive, like a crashed driver's would); the rerun must
     // pick up at the committed round, not round 0, and still converge to
-    // the same components as an un-checkpointed fresh run.
+    // the same components as an un-checkpointed fresh run. The path's ids
+    // are permuted: an id-ordered path contracts to a few edges and
+    // converges within the two rounds.
     val n = 4096
-    val edges = (1 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("src", "dst")
+    val edges = permutedPath(n).toDF("src", "dst")
     val root = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
     intercept[IllegalArgumentException] {
       ConnectedComponents.run(spark, edges, maxRounds = 2,
@@ -97,6 +132,74 @@ class PairsCcSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(resumed == fresh)
     graft.link.Pairs.rmDir(root)
+  }
+
+  test("CC contraction == union-find on a sorted-neighborhood-shaped graph") {
+    // mention ids are doc-major; each block links every id to its next two
+    // block neighbours in id order when they share an entity
+    val rnd = new scala.util.Random(11)
+    val mentions = (0 until 3000).map { i =>
+      (rnd.nextInt(25), (i / 10).toLong * 100000000L + (i % 10) * 10000L + 5, rnd.nextInt(3))
+    }
+    val edges = mentions.groupBy(_._1).values.toSeq.flatMap { b =>
+      val sorted = b.sortBy(_._2).toIndexedSeq
+      for {
+        i <- sorted.indices; k <- 1 to 2 if i + k < sorted.size
+        if sorted(i)._3 == sorted(i + k)._3
+      } yield (sorted(i)._2, sorted(i + k)._2)
+    }
+    matchesUnionFindAtEveryGate(edges)
+  }
+
+  test("CC contraction: duplicate, reversed and self-loop edges, isolated nodes") {
+    val chain = (1L until 400L).map(i => (i, i + 1))
+    val edges = chain ++ chain.take(50) ++ chain.map(_.swap).drop(100) ++
+      Seq((7L, 7L), (1000L, 1000L), (900L, 950L), (950L, 900L), (950L, 925L))
+    val nodes = (1L to 1100L).toDF("node")
+    val linked = unionFind(edges.filter { case (a, b) => a != b })
+    val want = (1L to 1100L).map(n => n -> linked.getOrElse(n, n)).toMap
+    for (gate <- gates) withGate(gate) {
+      val got = components(ConnectedComponents.runWithIsolated(
+        spark, nodes, edges.toDF("src", "dst")))
+      assert(got == want, s"gate $gate")
+    }
+  }
+
+  test("CC star rounds: id-ordered path <= 2, permuted path <= 8") {
+    def rounds(edges: Seq[(Long, Long)]): Int = withGate(Some("0")) {
+      var last = 0
+      val got = components(ConnectedComponents.run(spark, edges.toDF("src", "dst"),
+        onRound = r => last = r))
+      assert(got.size == 4096 && got.values.toSet == Set(1L))
+      last
+    }
+    val ordered = rounds((1 until 4096).map(i => (i.toLong, i + 1L)))
+    assert(ordered <= 2, s"id-ordered path took $ordered rounds")
+    val permuted = rounds(permutedPath(4096))
+    info(s"star rounds: id-ordered $ordered, permuted $permuted")
+    assert(permuted <= 8, s"permuted path took $permuted rounds")
+  }
+
+  test("mention id packing: inside its bounds, else a clear error") {
+    def id(doc: Long, start: Int, end: Int): Long =
+      Seq((doc, start, end)).toDF("doc_id", "start", "end")
+        .select(Pairs.mentionIdCol).head().getLong(0)
+    def rejected(doc: Long, start: Int, end: Int): Unit = {
+      val e = intercept[Exception](id(doc, start, end))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("mention id out of range")), s"($doc, $start, $end): $e")
+    }
+    val maxDoc = Pairs.MaxMentionDocId
+    assert(id(0L, 0, 1) == 1L)
+    assert(id(3L, 12, 13) == 300120013L)
+    assert(id(5L, 9999, 10000) == 600000000L)
+    assert(id(maxDoc, 9999, 10000) == 9223372036800000000L)
+    rejected(-1L, 0, 1)
+    rejected(maxDoc + 1, 0, 1)
+    rejected(0L, -1, 1)
+    rejected(0L, 5, 5)
+    rejected(0L, 0, 10001)
   }
 
   test("blockSeq == row_number over (block order by id), even with skew") {
