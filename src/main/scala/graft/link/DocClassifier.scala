@@ -1,20 +1,18 @@
 package graft.link
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-
-/** Fused, document-local execution of the context classifier
-  * (classifier.py:262-375): similarity graph, feature propagation and SVM
-  * scoring computed per document inside one `flatMapGroups`.
+/** The per-document context classifier kernel (classifier.py:262-375):
+  * similarity graph, feature propagation and SVM scoring for one
+  * document's tags, computed in memory. `FusedAnnotate` runs it inside its
+  * one doc-keyed `flatMapGroups` and takes the per-mention argmax.
   *
-  * Why this exists alongside the declarative Scoring path: the classifier
-  * is strictly doc-local with a bounded working set (<= 500 spans x 10 tags
-  * per document, tagger.py:45,118), so expressing it as six doc-keyed
-  * DataFrame joins shuffles the same rows repeatedly. Fusing turns the
-  * whole stage into ONE shuffle (groupBy doc) + in-memory arithmetic —
-  * exactly the reference's per-document numpy execution, distributed over
-  * documents. The declarative path remains the semantic oracle; a
-  * differential test pins fused == declarative.
+  * Why a kernel beside the declarative Scoring path: the classifier is
+  * strictly doc-local with a bounded working set (<= 500 spans x 10 tags
+  * per document, tagger.py:45,118), so the production path scores each
+  * document in one pass of primitive-array arithmetic — the reference's
+  * per-document numpy execution, distributed over documents — instead of
+  * six doc-keyed DataFrame joins that shuffle the same rows repeatedly.
+  * `Scoring` stays the declarative oracle: FusedSpec pins `FusedAnnotate`
+  * equal to `Scoring.bestLinks` for every similarity measure.
   */
 object DocClassifier {
 
@@ -195,39 +193,5 @@ object DocClassifier {
       i += 1
     }
     out
-  }
-
-  /** Fused best-link stage: one doc-keyed shuffle, in-memory classifier. */
-  def bestLinks(tags: DataFrame, params: Scoring.Params,
-      model: Scoring.SvmModel): DataFrame = {
-    val spark = tags.sparkSession
-    import spark.implicits._
-    val typed: Dataset[TagRow] = tags.select(
-      col("doc_id").cast("long"), col("start"), col("end"), col("surface"),
-      col("norm_key"), col("log_likelihood").cast("double"), col("qid"),
-      col("qid_num").cast("long"), col("label"), col("edges"),
-      col("nb_statements").cast("int"), col("nb_sitelinks").cast("int"),
-      col("rank").cast("double"), col("tag_order").cast("int")).as[TagRow]
-
-    typed.groupByKey(_.doc_id).flatMapGroups { (_, it) =>
-      val docTags = it.toArray.sortBy(t => (t.start, t.end, t.tag_order))
-      val scores = scoreDoc(docTags, params, model)
-      // per-mention argmax with score > 0, ties by tag_order
-      // (classify_mentions, classifier.py:323-338)
-      docTags.indices
-        .groupBy(i => (docTags(i).start, docTags(i).end))
-        .valuesIterator
-        .flatMap { idxs =>
-          val best = idxs
-            .filter(i => scores(i) > 0.0)
-            .sortBy(i => (-scores(i), docTags(i).tag_order))
-            .headOption
-          best.map { i =>
-            val t = docTags(i)
-            BestLink(t.doc_id, t.start, t.end, t.surface, t.norm_key,
-              t.log_likelihood, t.qid, t.label, scores(i))
-          }
-        }
-    }.toDF()
   }
 }

@@ -2,7 +2,7 @@ package graft.link
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Pipeline
+import graft.{Pipeline, SessionCache}
 import graft.model.Bow
 import graft.text.TextOps
 
@@ -73,39 +73,15 @@ object FusedAnnotate {
           r.getInt(3), r.getInt(4), r.getDouble(5))
       }.toMap
 
-  // Per-artifacts broadcast cache: annotate() used to collect the feature
-  // map and re-broadcast it (plus the BOW model) on EVERY call — a fixed
-  // per-call driver cost that ate into scaling efficiency. One broadcast
-  // per Artifacts instance is the right lifecycle (the reference builds its
-  // Solr index once and serves many tagging requests).
-  // Keyed per (SparkContext, Artifacts): a broadcast created on a stopped
-  // session must never be served to a new session reusing the same
-  // Artifacts, and keying by context lets the listener below evict every
-  // entry (broadcast handles + the collected feature maps) when its
-  // application ends — the r3 ADVICE JVM-lifetime pin.
-  private val bcCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.SparkContext, Pipeline.Artifacts),
-      (org.apache.spark.broadcast.Broadcast[Bow.Model],
-       org.apache.spark.broadcast.Broadcast[Map[String, QidFeat]])]()
-
-  private val evictorInstalled =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
-
-  private def broadcasts(spark: SparkSession, a: Pipeline.Artifacts) = {
-    val sc = spark.sparkContext
-    if (evictorInstalled.add(sc))
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          val it = bcCache.keySet().iterator()
-          while (it.hasNext) { if (it.next()._1 eq sc) it.remove() }
-          evictorInstalled.remove(sc); ()
-        }
-      })
-    bcCache.computeIfAbsent((sc, a), _ =>
-      (sc.broadcast(a.bow), sc.broadcast(qidFeatures(a))))
-  }
+  // One broadcast of the BOW model and the feature map per (session,
+  // Artifacts): re-collecting and re-broadcasting them on every call was a
+  // fixed per-call driver cost (the reference builds its Solr index once
+  // and serves many tagging requests). SessionCache drops them when the
+  // application ends, so a stopped session's broadcasts are never served.
+  private def broadcasts(spark: SparkSession, a: Pipeline.Artifacts) =
+    SessionCache(spark, ("fused_broadcasts", a)) {
+      (spark.sparkContext.broadcast(a.bow), spark.sparkContext.broadcast(qidFeatures(a)))
+    }
 
   /** Doc-local pipeline: NO_SUB -> tagsLimit -> prune -> top-10 by rank ->
     * context classifier -> per-mention argmax. Shared by both strategies. */

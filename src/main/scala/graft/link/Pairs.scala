@@ -3,6 +3,7 @@ package graft.link
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
 import graft.functions.JaroWinkler.jaroWinkler
 
 /** Pairwise mention scoring at the blocking key (north_rule): mentions that
@@ -86,8 +87,8 @@ object Pairs {
     // The m snapshot exists to make the input execute exactly once: the
     // range exchange below runs a SEPARATE sampling job over its child,
     // which would otherwise re-execute the whole upstream (annotate!) per
-    // job. When the caller guarantees the input is already materialized
-    // (a persisted stage cache, Pipeline.pairs), the sampling job is a
+    // job. When the input is already materialized (candidatePairs over a
+    // persisted frame, e.g. Pipeline.pairs' stage cache), the sampling job is a
     // cheap cache re-scan and the snapshot write+read is pure overhead —
     // skip it. The `part` snapshot below is NOT skippable in either mode:
     // it pins the pid column as data (two consumers + nondeterministic
@@ -162,40 +163,13 @@ object Pairs {
   private[graft] def cleanupOnExit(dir: String): Unit =
     exitCleanup.synchronized { exitCleanup += dir; () }
 
-  /** Round-2 implementation of blockSeq (persist + eager localCheckpoint).
-    * Kept as a probe/regression target only — see blockSeq's scaladoc for
-    * why it anti-scales under AQE. */
-  private[graft] def blockSeqCheckpoint(m0: DataFrame, numParts: Int): DataFrame = {
-    // repartitionByRange runs a SEPARATE range-sampling job over its input
-    // before the shuffle: without this persist the entire upstream pipeline
-    // (annotate!) executes twice per call
-    val m = m0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val part = m
-      .repartitionByRange(numParts, col("block_key"), col("mention_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    m.unpersist(false) // checkpoint materialized eagerly; input no longer read
-    val cnts = part.groupBy("pid", "block_key").agg(count(lit(1)).as("cnt"))
-    val wOff = Window.partitionBy("block_key").orderBy("pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = cnts
-      .withColumn("off", sum(col("cnt")).over(wOff))
-      .filter(col("off").isNotNull && col("off") > lit(0L))
-      .select(col("pid"), col("block_key"), col("off"))
-    val wLocal = Window.partitionBy("pid", "block_key").orderBy("mention_id")
-    part
-      .withColumn("rn", row_number().over(wLocal).cast("long"))
-      .join(broadcast(offs), Seq("pid", "block_key"), "left")
-      .withColumn("seq", coalesce(col("off"), lit(0L)) + col("rn"))
-      .drop("pid", "rn", "off")
-  }
-
   /** Sorted-neighborhood candidate pairs within each blocking key.
     * Input: linked mentions (doc_id, start, end, surface, norm_key,
     * best_qid). Output: one row per pair with surface similarities and the
-    * same_entity decision (= linked entity agreement). */
-  def candidatePairs(mentions: DataFrame, windowSize: Int = WindowSize,
-      seqImpl: (DataFrame, Int) => DataFrame = blockSeq(_, _)): DataFrame = {
+    * same_entity decision (= linked entity agreement). A persisted input
+    * (a stage cache) is already materialized, so blockSeq skips its input
+    * snapshot. */
+  def candidatePairs(mentions: DataFrame, windowSize: Int = WindowSize): DataFrame = {
     val spark = mentions.sparkSession
     val m = mentions
       .withColumn("mention_id", mentionIdCol)
@@ -204,7 +178,8 @@ object Pairs {
       // "sort merge join" variants), the realistic record-linkage setup
       .withColumn("block_key", split(col("norm_key"), " ").getItem(0))
       .select("block_key", "mention_id", "surface", "best_qid")
-    val ranked = seqImpl(m, spark.sparkContext.defaultParallelism * 2)
+    val ranked = blockSeq(m, spark.sparkContext.defaultParallelism * 2,
+      inputMaterialized = mentions.storageLevel != StorageLevel.NONE)
     val left = ranked.select(
       col("block_key"), col("seq"),
       col("mention_id").as("id1"), col("surface").as("surface1"),

@@ -52,7 +52,7 @@ object Scoring {
     * graph, distance decay, normalization and propagation all influence
     * the served score. Used by the driver-checked `el_annotate_ctx` query
     * (the DuckDB oracle unrolls the same propagation in SQL) and by
-    * ScoringSpec's differential tests. */
+    * the ScoringSpec and FusedSpec differential tests. */
   def ctxModel(nbSteps: Int = 2): SvmModel = {
     val dim = 5 * (nbSteps + 1)
     SvmModel(

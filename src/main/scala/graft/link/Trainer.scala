@@ -57,38 +57,43 @@ object Trainer {
     val labeled = labelTags(feats, gold)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    val counts = labeled.groupBy(col("label")).count().collect()
-      .map(r => r.getDouble(0) -> r.getLong(1)).toMap
-    val n = counts.values.sum.toDouble
-    require(counts.getOrElse(1.0, 0L) > 0, "no positive samples (classifier.py:212)")
-    val wPos = n / (2.0 * counts(1.0))
-    val wNeg = n / (2.0 * counts(0.0))
+    // released on every exit, the one-class rejections included
+    val (scalerModel, svc) = try {
+      val counts = labeled.groupBy(col("label")).count().collect()
+        .map(r => r.getDouble(0) -> r.getLong(1)).toMap
+      val n = counts.values.sum.toDouble
+      require(counts.getOrElse(1.0, 0L) > 0, "no positive samples (classifier.py:212)")
+      require(counts.getOrElse(0.0, 0L) > 0, "no negative samples (classifier.py:212)")
+      val wPos = n / (2.0 * counts(1.0))
+      val wNeg = n / (2.0 * counts(0.0))
 
-    val prepared = new VectorAssembler()
-      .setInputCols(featCols.toArray).setOutputCol("raw_features")
-      .transform(labeled
-        .withColumn("weight", when(col("label") === 1.0, lit(wPos)).otherwise(lit(wNeg))))
+      val prepared = new VectorAssembler()
+        .setInputCols(featCols.toArray).setOutputCol("raw_features")
+        .transform(labeled
+          .withColumn("weight", when(col("label") === 1.0, lit(wPos)).otherwise(lit(wNeg))))
 
-    val scalerModel = new StandardScaler()
-      .setInputCol("raw_features").setOutputCol("features")
-      .setWithMean(true).setWithStd(true)
-      .fit(prepared)
-    val scaled = scalerModel.transform(prepared)
+      val scalerModel = new StandardScaler()
+        .setInputCol("raw_features").setOutputCol("features")
+        .setWithMean(true).setWithStd(true)
+        .fit(prepared)
+      val scaled = scalerModel.transform(prepared)
 
-    // sklearn LinearSVC(C) minimizes 0.5*||w||^2 + C*sum_i(w_i * loss_i);
-    // Spark minimizes regParam*0.5*||w||^2 + (1/sum_w)*sum_i(w_i * loss_i).
-    // Dividing sklearn's objective by C*sum(w) maps the regularization
-    // strength: regParam = 1/(C * sum(sampleWeights)); balanced weights sum
-    // to n. Residual non-equivalence: sklearn's default squared_hinge vs
-    // Spark's hinge loss — not expressible as a parameter.
-    val regParam = 1.0 / (c * n)
-    val svc = new LinearSVC()
-      .setRegParam(regParam).setMaxIter(maxIter)
-      .setLabelCol("label").setWeightCol("weight").setFeaturesCol("features")
-      .fit(scaled)
-
-    labeled.unpersist()
-    caches.foreach(_.unpersist(false)) // per-step propagation caches
+      // sklearn LinearSVC(C) minimizes 0.5*||w||^2 + C*sum_i(w_i * loss_i);
+      // Spark minimizes regParam*0.5*||w||^2 + (1/sum_w)*sum_i(w_i * loss_i).
+      // Dividing sklearn's objective by C*sum(w) maps the regularization
+      // strength: regParam = 1/(C * sum(sampleWeights)); balanced weights sum
+      // to n. Residual non-equivalence: sklearn's default squared_hinge vs
+      // Spark's hinge loss — not expressible as a parameter.
+      val regParam = 1.0 / (c * n)
+      val svc = new LinearSVC()
+        .setRegParam(regParam).setMaxIter(maxIter)
+        .setLabelCol("label").setWeightCol("weight").setFeaturesCol("features")
+        .fit(scaled)
+      (scalerModel, svc)
+    } finally {
+      labeled.unpersist()
+      caches.foreach(_.unpersist(false)) // per-step propagation caches
+    }
     val sigma = scalerModel.std.toArray.map(s => if (s == 0.0) 1.0 else s)
     Scoring.SvmModel(
       weights = svc.coefficients.toArray,
@@ -122,8 +127,9 @@ object Trainer {
         val trainGold = gold.filter(col("doc_id") % k =!= fold)
         val testGold = gold.filter(col("doc_id") % k === fold)
         val m = train(trainTags, trainGold, params, c, maxIter)
-        val (_, _, f1) = evaluate(
-          DocClassifier.bestLinks(testTags, params, m), testGold)
+        val best = Scoring.bestLinks(testTags, params, m)
+        val (_, _, f1) = evaluate(best, testGold)
+        best.unpersist(false)
         f1Sum += f1
       }
       params -> f1Sum / k
@@ -138,9 +144,8 @@ object Trainer {
   /** evaluate_model (classifier.py:221-260) as a one-row distributed plan:
     * precision over predictions, recall over gold judgments, on the
     * best-link output. Columns (valid, preds, judgments, precision, recall,
-    * f1); the ratio columns are rounded to 6 decimals for cross-engine
-    * comparison, the counts are exact. */
-  def evaluateDf(best: DataFrame, gold: DataFrame): DataFrame = {
+    * f1), unrounded. */
+  private def prf(best: DataFrame, gold: DataFrame): DataFrame = {
     val g = gold.select(col("doc_id"), col("start"), col("end"),
       col("qid").as("gold_qid"))
     val joined = best.join(g, Seq("doc_id", "start", "end"), "left")
@@ -156,25 +161,19 @@ object Trainer {
     val f1 = when(p + rec > 0, lit(2.0) * p * rec / (p + rec)).otherwise(lit(0.0))
     counts.crossJoin(judgments).select(
       col("valid"), col("preds"), col("judgments"),
-      round(p, 6).as("precision"), round(rec, 6).as("recall"),
-      round(f1, 6).as("f1"))
+      p.as("precision"), rec.as("recall"), f1.as("f1"))
   }
 
-  /** Scalar convenience over [[evaluateDf]]. */
+  /** [[prf]] with the ratio columns rounded to 6 decimals for cross-engine
+    * comparison; the counts are exact. */
+  def evaluateDf(best: DataFrame, gold: DataFrame): DataFrame =
+    prf(best, gold).select(col("valid"), col("preds"), col("judgments"),
+      round(col("precision"), 6).as("precision"), round(col("recall"), 6).as("recall"),
+      round(col("f1"), 6).as("f1"))
+
+  /** Scalar (precision, recall, f1) over [[prf]], in one job. */
   def evaluate(best: DataFrame, gold: DataFrame): (Double, Double, Double) = {
-    val g = gold.select(col("doc_id"), col("start"), col("end"),
-      col("qid").as("gold_qid"))
-    val joined = best.join(g, Seq("doc_id", "start", "end"), "left")
-    val r = joined.agg(
-      sum(when(col("gold_qid").isNotNull && col("gold_qid") === col("best_qid"), 1L)
-        .otherwise(0L)).as("valid"),
-      count(lit(1)).as("preds")).head()
-    val valid = r.getLong(0).toDouble
-    val preds = r.getLong(1).toDouble
-    val judgments = g.count().toDouble
-    val p = if (preds > 0) valid / preds else 1.0
-    val rec = if (judgments > 0) valid / judgments else 1.0
-    val f1 = if (p + rec > 0) 2 * p * rec / (p + rec) else 0.0
-    (p, rec, f1)
+    val r = prf(best, gold).select("precision", "recall", "f1").head()
+    (r.getDouble(0), r.getDouble(1), r.getDouble(2))
   }
 }

@@ -222,6 +222,11 @@ class PairsCcSpec extends AnyFunSuite {
 
   test("distributed candidatePairs == window-oracle candidatePairs") {
     val best = Pipeline.annotate(spark, "/root/testdata/sf0.001")
+    // the stage cache is persisted, so blockSeq skips its input snapshot;
+    // the filtered view is not, so it takes the snapshot path
+    val unpersisted = best.filter(lit(true))
+    assert(best.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert(unpersisted.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
     def key(df: org.apache.spark.sql.DataFrame) =
       df.select("block_key", "id1", "id2", "surface1", "surface2", "qid1",
         "qid2", "lev", "jw", "same_entity")
@@ -230,6 +235,7 @@ class PairsCcSpec extends AnyFunSuite {
     val win = key(Pairs.candidatePairsViaWindow(best))
     assert(dist.nonEmpty)
     assert(dist == win)
+    assert(key(Pairs.candidatePairs(unpersisted)) == win)
   }
 
   test("GATE: pairwise F1 >= 0.99 vs gold mention-pair labels at the blocking key") {

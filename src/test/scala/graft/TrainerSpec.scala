@@ -103,6 +103,8 @@ class TrainerSpec extends AnyFunSuite {
       Mentions.extract(docs, a.dictKeys, a.maxKeyTokens),
       a.dictKeys, a.entityDict, a.pagerank, a.bow).persist()
     val gold = goldFor(tags).persist()
+    tags.count(); gold.count()
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
     val grid = Seq(
       Scoring.Params(nbSteps = 1),
       Scoring.Params(nbSteps = 2, similarity = "edge_ratio"))
@@ -113,7 +115,26 @@ class TrainerSpec extends AnyFunSuite {
     assert(bestF1 === scores.map(_._2).max)
     assert(grid.contains(bestP))
     assert(model.weights.length == 5 * (bestP.nbSteps + 1))
+    // every fold's best-link frame and training cache is released
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore)
     gold.unpersist(); tags.unpersist()
+  }
+
+  test("train rejects a one-class fold with a clear message") {
+    // two mentions, one candidate each; gold decides every label
+    val tags = Seq(
+      (1L, 0, 4, "Q1", 1L, Seq(2), -3.0, 20.0, 2, 10),
+      (1L, 10, 14, "Q2", 2L, Seq(1), -4.0, 18.0, 3, 12))
+      .toDF("doc_id", "start", "end", "qid", "qid_num", "edges",
+        "log_likelihood", "rank", "nb_statements", "nb_sitelinks")
+    def trainWith(gold: Seq[(Long, Int, Int, String)]) =
+      intercept[IllegalArgumentException] {
+        Trainer.train(tags, gold.toDF("doc_id", "start", "end", "qid"), params)
+      }.getMessage
+    assert(trainWith(Seq((1L, 0, 4, "Q1"), (1L, 10, 14, "Q2")))
+      .contains("no negative samples"))
+    assert(trainWith(Seq((1L, 0, 4, "Q9"), (1L, 10, 14, "Q9")))
+      .contains("no positive samples"))
   }
 
   test("evaluate matches reference P/R/F1 arithmetic on a crafted case") {
